@@ -3,7 +3,17 @@
 
 Used to find queries that deserve a SCALECURVE.json row (the tracking
 criterion is >=0.5s at sf0.1).  Writes TIMEALL.json at the repo root:
-{"sf_dir": ..., "sec": {name: sec, ...}}.
+
+  {"sf_dir": ..., "kv_first_use_sec": ..., "calib_before_sec": ...,
+   "sec": {name: sec, ...}, "calib_after_sec": ...}
+
+- ``sec``: one collect per query, ``None`` if it raised;
+- ``kv_first_use_sec``: the uda_kv DataSource's one-time spin-up, paid
+  before the sweep so it lands in no query's row;
+- ``calib_before_sec`` / ``calib_after_sec``: bench.py's fixed
+  single-thread CPU probe before and after the sweep (host-load stamp).
+
+Every interval is timed with ``time.perf_counter``.
 
 Run:  python scripts/time_all.py [sf_dir]
 """
@@ -39,21 +49,20 @@ def main() -> None:
     # self-inconsistent with steady-state measurements (VERDICT r10 #2).
     # The one-time cost is recorded separately instead of hidden.
     import tempfile
-    import time as _t
 
     from pyspark.sql import functions as _F
 
     from uda_spark.sources import pyds as _pyds
 
     _pyds.register(spark)
-    _t0 = _t.monotonic()
+    _t0 = time.perf_counter()
     with tempfile.TemporaryDirectory() as _d:
         spark.range(2).select(
             _F.col("id").cast("string").cast("binary").alias("key"),
             _F.col("id").cast("string").cast("binary").alias("value"),
         ).write.format("uda_kv").mode("overwrite").save(_d + "/warm")
         spark.read.format("uda_kv").load(_d + "/warm").collect()
-    kv_first_use = round(_t.monotonic() - _t0, 3)
+    kv_first_use = round(time.perf_counter() - _t0, 3)
     print(f"# uda_kv first-use warmup: {kv_first_use}s", file=sys.stderr)
 
     def calib() -> float:
@@ -74,10 +83,10 @@ def main() -> None:
         "sec": {},
     }
     for name, spec in specs.items():
-        t0 = time.monotonic()
+        t0 = time.perf_counter()
         try:
             spec.fn(spark, sf).collect()
-            out["sec"][name] = round(time.monotonic() - t0, 3)
+            out["sec"][name] = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # record, keep sweeping
             out["sec"][name] = None
             print(f"# FAIL {name}: {exc}", file=sys.stderr)

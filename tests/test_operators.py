@@ -2131,9 +2131,10 @@ class TestR14Guards:
 
 class TestArrowTextKernels:
     """The Arrow tokenize/shingle/signature kernels (guide §4.2) must be
-    value-identical to the relational HOF formulations they replace —
-    asserted here by running BOTH paths over the real corpus plus a
-    tokenizer torture set, and by a JVM-vs-Python case-mapping sweep."""
+    value-identical to the relational HOF formulations — asserted here by
+    running BOTH paths over the real corpus plus a tokenizer torture set,
+    by checking the one Python gram function against portable.shingles,
+    and by a JVM-vs-Python case-mapping sweep."""
 
     TORTURE = [
         (1, ""),                                  # empty text: one empty token
@@ -2148,18 +2149,15 @@ class TestArrowTextKernels:
         (10, "x y x y x y x y"),                  # duplicate bigrams
     ]
 
-    def _both(self, spark, fn):
+    def _both(self, monkeypatch, fn):
+        """(relational, kernel) results of ``fn``: the relational side runs
+        with the kernel dispatch forced to its schema fallback."""
         from uda_spark.operators import dedup as D
 
-        saved = D.USE_ARROW_TEXT_KERNELS
-        try:
-            D.USE_ARROW_TEXT_KERNELS = False
+        with monkeypatch.context() as m:
+            m.setattr(D, "_arrow_text_kernel_ok", lambda *a: False)
             old = fn()
-            D.USE_ARROW_TEXT_KERNELS = True
-            new = fn()
-        finally:
-            D.USE_ARROW_TEXT_KERNELS = saved
-        return old, new
+        return old, fn()
 
     def test_lower_parity_wide_codepoint_sweep(self, spark):
         # Python str.lower() must equal Spark lower() (JVM Locale.ROOT
@@ -2196,12 +2194,36 @@ class TestArrowTextKernels:
         )
         return docs.unionByName(extra)
 
-    def test_minhash_grouped_kernel_matches_relational(self, spark):
+    def test_gram_fn_matches_portable(self, spark):
+        # The one Python gram function vs portable.shingles(tokens(...))
+        # exploded WITH multiplicity, for every k a kernel uses (1 SimHash,
+        # 2 repetition stats + Jaccard GEMM, 3 MinHash, 5 decontaminate +
+        # dup coverage), over the corpus plus the torture set.
+        from collections import Counter
+
+        from uda_spark.functions import portable
+        from uda_spark.operators.dedup import gram_fn
+
+        docs = self._corpus_plus_torture(spark).where(F.col("text").isNotNull())
+        texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+        toks = portable.tokens("text", "spark")
+        for k in (1, 2, 3, 5):
+            grams = gram_fn(k)
+            sh = F.expr(portable.shingles(toks, k, "spark"))
+            rel = Counter(
+                (r["doc_id"], r["g"])
+                for r in docs.select("doc_id", F.explode(sh).alias("g")).collect()
+            )
+            py = Counter((d, g) for d, txt in texts.items() for g in grams(txt))
+            assert py == rel, k
+
+    def test_minhash_grouped_kernel_matches_relational(self, spark, monkeypatch):
         from uda_spark.operators import dedup as D
 
         docs = self._corpus_plus_torture(spark)
         old, new = self._both(
-            spark, lambda: D._minhash_grouped(docs, "text", "doc_id", 16, 3).collect()
+            monkeypatch,
+            lambda: D._minhash_grouped(docs, "text", "doc_id", 16, 3).collect(),
         )
         o = {r["doc"]: r for r in old}
         n = {r["doc"]: r for r in new}
@@ -2211,33 +2233,18 @@ class TestArrowTextKernels:
                 assert o[d][f"h{h}"] == n[d][f"h{h}"], (d, h)
             assert sorted(o[d]["sset"]) == sorted(n[d]["sset"]), d
 
-    def test_simhash_kernel_matches_relational(self, spark):
+    def test_simhash_kernel_matches_relational(self, spark, monkeypatch):
         from uda_spark.operators import dedup as D
 
         docs = self._corpus_plus_torture(spark)
         old, new = self._both(
-            spark,
+            monkeypatch,
             lambda: {
                 r["doc_id"]: r["sig"]
                 for r in D.simhash_signatures(docs, "text", "doc_id").collect()
             },
         )
         assert old == new
-
-    def test_shingle_rows_kernel_matches_explode(self, spark):
-        from uda_spark.operators import dedup as D
-
-        docs = self._corpus_plus_torture(spark)
-        rows_new = {
-            (r["doc"], r["s"])
-            for r in D.shingle_rows_arrow(docs, "text", "doc_id", 3).collect()
-        }
-        sh = D.with_shingles(docs, "text", 3).select(
-            F.col("doc_id").alias("doc"),
-            F.explode(F.array_distinct("shingles")).alias("s"),
-        )
-        rows_old = {(r["doc"], r["s"]) for r in sh.collect()}
-        assert rows_new == rows_old
 
     def test_kernel_dispatch_falls_back_on_nonlong_ids(self, spark):
         from uda_spark.operators import dedup as D
@@ -2250,43 +2257,6 @@ class TestArrowTextKernels:
         # generic-id relational path still works end to end
         pairs = D.minhash_near_dup_pairs(docs, "text", "doc_id").collect()
         assert [(p["doc_a"], p["doc_b"]) for p in pairs] == [("a", "b")]
-
-    def test_ngram_jaccard_gemm_matches_relational(self, spark):
-        # query-level twin of the kernel parity tests: the block-GEMM
-        # formulation of text_ngram_jaccard_pairs must emit the identical
-        # (doc_a, doc_b, jaccard) rows (exact doubles) as the relational
-        # self-join it replaces.
-        from tests.conftest import SF_SMOKE
-        from uda_spark.operators import dedup as D
-        from uda_spark.registry import all_specs
-
-        spec = all_specs()["text_ngram_jaccard_pairs"]
-        old, new = self._both(
-            spark, lambda: sorted(map(tuple, spec.fn(spark, SF_SMOKE).collect()))
-        )
-        assert old == new and len(old) > 0
-
-    def test_decontaminate_kernel_matches_relational(self, spark):
-        # per-doc-distinct gram-hash kernel vs explode+hash60+distinct
-        from tests.conftest import SF_SMOKE
-        from uda_spark.registry import all_specs
-
-        spec = all_specs()["text_decontaminate"]
-        old, new = self._both(
-            spark, lambda: sorted(map(tuple, spec.fn(spark, SF_SMOKE).collect()))
-        )
-        assert old == new and len(old) > 0
-
-    def test_dup_ngram_coverage_kernel_matches_relational(self, spark):
-        # per-doc gram-hash COUNT kernel vs explode+hash60+groupBy
-        from tests.conftest import SF_SMOKE
-        from uda_spark.registry import all_specs
-
-        spec = all_specs()["text_dup_ngram_coverage"]
-        old, new = self._both(
-            spark, lambda: sorted(map(tuple, spec.fn(spark, SF_SMOKE).collect()))
-        )
-        assert old == new and len(old) > 0
 
     def test_gram_hash_rows_null_text_mirrors_explode(self, spark):
         # NULL text must produce the same (doc, NULL gh) row the explode
@@ -2320,16 +2290,3 @@ class TestArrowTextKernels:
             ).collect()
         }
         assert ker_counts == rel_counts
-
-    def test_repetition_stats_kernel_matches_relational(self, spark):
-        # query-level twin: the map-only bigram Counter kernel in
-        # text_repetition_stats must emit identical rows (exact longs +
-        # round(6) doubles) as the two-exchange relational aggregate.
-        from tests.conftest import SF_SMOKE
-        from uda_spark.registry import all_specs
-
-        spec = all_specs()["text_repetition_stats"]
-        old, new = self._both(
-            spark, lambda: sorted(map(tuple, spec.fn(spark, SF_SMOKE).collect()))
-        )
-        assert old == new and len(old) > 0

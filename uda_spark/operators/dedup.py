@@ -3,9 +3,9 @@
 Scale design (100 TB corpus):
   * exact dedup — hash-groupBy on a digest of the content, never on the
     content itself: the shuffle moves 32-byte keys + doc ids, not bodies.
-  * MinHash/LSH near-dup — per-doc signatures are computed map-side with
-    higher-order functions (no Python, no shuffle); only (band, band-hash,
-    doc_id) triples shuffle for the band join, and candidate verification
+  * MinHash/LSH near-dup — per-doc signatures are computed map-side in
+    one Arrow kernel pass (no shuffle); only (band, band-hash, doc_id)
+    triples shuffle for the band join, and candidate verification
     re-joins the (small) candidate set back to the shingle arrays.
   * SimHash — one 64/32-bit integer per doc; near-dup = small Hamming
     distance, bucketed by signature prefix for the scale path.
@@ -40,24 +40,18 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def with_shingles(df: DataFrame, text_col: str, k: int = 3) -> DataFrame:
-    toks = portable.tokens(text_col, "spark")
-    return df.withColumn("shingles", F.expr(portable.shingles(toks, k, "spark")))
-
-
-# Arrow tokenize/shingle/signature kernels (guide §4.2) — the default.
-# False falls back to the relational (HOF + explode + aggregate)
-# formulation; the A/B harness and the parity tests flip this to prove
-# both paths produce identical values.
-USE_ARROW_TEXT_KERNELS = True
-
-# When the map-only Arrow kernel feeds a persisted signature relation
-# whose sset arrays are then joined twice (candidate verification), one
-# explicit doc repartition before the persist replaces two downstream
-# sset exchanges (the relational path gets that layout for free from
-# its final aggregate).  Value-identical either way; flag exists for
-# in-session A/B.
-REPARTITION_KERNEL_SIGNATURES = True
+def distinct_shingles(
+    df: DataFrame, text_col: str, id_col: str, k: int = 3
+) -> DataFrame:
+    """(doc, s): one row per DISTINCT per-doc k-shingle — the one
+    relational (doc, s) build (``portable.tokens`` + ``portable.shingles``
+    + ``explode(array_distinct(...))``), used wherever the shingle STRINGS
+    themselves feed an exchange or a set intersection.  NULL filtering,
+    ``ensure_min_partitions`` and persist stay with the callers."""
+    sh = portable.shingles(portable.tokens(text_col, "spark"), k, "spark")
+    return df.select(
+        F.col(id_col).alias("doc"), F.explode(F.array_distinct(F.expr(sh))).alias("s")
+    )
 
 
 def _arrow_text_kernel_ok(df: DataFrame, text_col: str, id_col: str) -> bool:
@@ -74,69 +68,31 @@ def _arrow_text_kernel_ok(df: DataFrame, text_col: str, id_col: str) -> bool:
         return False
 
 
-def _doc_shingler(k: int):
-    """Tokenize+shingle one document — the Python twin of
-    ``portable.tokens`` + ``portable.shingles``.
+def gram_fn(k: int):
+    """The one Python tokenize+shingle contract: ``grams(text)`` returns
+    the document's k-token grams WITH multiplicity, in text order — the
+    twin of ``portable.shingles(portable.tokens(text), k)`` exploded
+    (tests/test_operators.py::TestArrowTextKernels::test_gram_fn_matches_portable).
 
-    Parity contract (tests/test_operators.py::test_arrow_shingle_parity):
-    ``str.lower()`` must equal Spark's ``lower()`` and DuckDB's
-    ``lower()`` over the corpus alphabet, and ``str.split(' ')`` equals
-    Spark's ``split(_, ' ')`` (both keep empty strings, including
-    leading/trailing).  Nested function on purpose: cloudpickle
+    ``str.lower()`` must equal Spark's and DuckDB's ``lower()`` over the
+    corpus alphabet, and ``str.split(' ')`` equals Spark's ``split(_, ' ')``
+    (both keep empty strings, including leading/trailing); fewer than k
+    tokens yield one whole-document gram.  Every Arrow text kernel
+    (MinHash, SimHash at k=1, gram hashes, repetition stats, the Jaccard
+    GEMM) tokenizes through it.  Nested function on purpose: cloudpickle
     serializes it BY VALUE so Python workers never need ``uda_spark``
     importable (zero-install contract, same as the GEMM kernels in
     operators/similarity.py).
     """
 
-    def shingle_set(text: str):
+    def grams(text: str) -> list[str]:
         toks = text.lower().split(" ")
         n = len(toks)
         if n >= k:
-            return {" ".join(toks[i : i + k]) for i in range(n - k + 1)}
-        return {" ".join(toks)}
+            return [" ".join(toks[i : i + k]) for i in range(n - k + 1)]
+        return [" ".join(toks)]
 
-    return shingle_set
-
-
-def shingle_rows_arrow(
-    df: DataFrame, text_col: str, id_col: str, k: int = 3
-) -> DataFrame:
-    """(doc, s): one row per DISTINCT per-doc shingle — the Arrow-kernel
-    replacement for ``with_shingles`` + ``explode(array_distinct(...))``.
-
-    The shingle HOF (``transform(sequence(...), i -> array_join(slice(...``
-    executes interpreted (CodegenFallback) per document; guide §4.2 moves
-    that per-row work into one ``mapInArrow`` pass.  NULL texts raise —
-    callers filter them first (the signature NULL contract lives there).
-    Distinct-per-doc order: sorted (vs the explode path's array order),
-    invisible downstream — every consumer treats (doc, s) as a set.
-    """
-    shingle_set = _doc_shingler(k)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids: list[int] = []
-            out_s: list[str] = []
-            for i, txt in zip(ids, texts):
-                if txt is None:
-                    raise ValueError(
-                        "shingle kernel received NULL text — filter upstream"
-                    )
-                ss = sorted(shingle_set(txt))
-                out_ids.extend([i] * len(ss))
-                out_s.extend(ss)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, pa.int64()), pa.array(out_s, pa.string())],
-                names=["doc", "s"],
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("_text")
-    ).mapInArrow(gen, "doc long, s string")
+    return grams
 
 
 def gram_hash_rows_arrow(
@@ -154,13 +110,13 @@ def gram_hash_rows_arrow(
     - ``int(md5(g).hexdigest()[:15], 16)`` == Spark's
       ``conv(substring(md5(g),1,15),16,10)`` (same big-endian fold of
       the first 15 hex chars — see portable.hash60).
-    - tokenize/shingle is the parity-tested ``_doc_shingler`` contract
-      (``str.lower()``/``split(' ')`` == JVM ``lower()``/``split``).
+    - tokenize/shingle is the parity-tested :func:`gram_fn` contract.
     - NULL text mirrors the explode path exactly: shingles(NULL) is
       ``[NULL]``, md5(NULL) is NULL — one (doc, NULL gh[, c=1]) row.
     - collisions of two distinct grams within one doc merge into one gh
       in both paths (the relational path groups/distincts on gh too).
     """
+    gram_list = gram_fn(k)
 
     def gen(batches):
         from collections import Counter
@@ -180,12 +136,7 @@ def gram_hash_rows_arrow(
                     out_g.append(None)
                     out_c.append(1)
                     continue
-                toks = txt.lower().split(" ")
-                n = len(toks)
-                if n >= k:
-                    grams = [" ".join(toks[j : j + k]) for j in range(n - k + 1)]
-                else:
-                    grams = [" ".join(toks)]
+                grams = gram_list(txt)
                 if counts:
                     cc = Counter(
                         int(md5(g.encode("utf-8")).hexdigest()[:15], 16)
@@ -231,7 +182,7 @@ def _minhash_grouped_arrow(
     binary min), ``sset`` sorted instead of ``collect_set`` order (every
     consumer is order-insensitive: sizes and ``array_intersect`` only).
     """
-    shingle_set = _doc_shingler(k)
+    gram_list = gram_fn(k)
     n_salts = n_hashes // 4
 
     def gen(batches):
@@ -249,7 +200,7 @@ def _minhash_grouped_arrow(
                     raise ValueError(
                         "minhash kernel received NULL text — filter upstream"
                     )
-                sl = sorted(shingle_set(txt))
+                sl = sorted(set(gram_list(txt)))
                 ssets.append(sl)
                 raw = [s.encode("utf-8") for s in sl]
                 h = 0
@@ -285,9 +236,13 @@ def _minhash_grouped(
     n_hashes: int,
     k: int,
     shingle_rows: DataFrame | None = None,
+    by_doc: bool = False,
 ) -> DataFrame:
     """(doc, h0..h{n-1}, sset): per-doc MinHash values as COLUMNS plus the
-    distinct shingle set — the whole-stage-codegen formulation.
+    distinct shingle set.  (long id, string text) inputs take the
+    map-only Arrow kernel (:func:`_minhash_grouped_arrow`); other schemas
+    and caller-supplied ``shingle_rows`` take the whole-stage-codegen
+    formulation below, which is also the kernel's parity reference.
 
     Shingles explode to rows; each row computes ``n_hashes/4`` md5s as
     plain (codegen'd) expressions; a single hash aggregate takes
@@ -305,6 +260,15 @@ def _minhash_grouped(
     sub-k-token docs yield one whole-doc shingle (portable.shingles), so
     e.g. all empty documents are mutual near-duplicates — the curation-
     friendly reading.
+
+    ``by_doc`` is for callers that join the result on ``doc`` (candidate
+    verification): the kernel output is map-only and keeps the scan
+    partitioning, so both verify joins would each exchange the heavy
+    sset arrays by doc.  One doc repartition BEFORE the caller's persist
+    moves the arrays once and is reused by both joins (the relational
+    path gets this layout for free from its final hash aggregate).
+    Interleaved 3-way A/B at sf0.1/32c, med of 6: kernel 1.46 /
+    kernel+repart 1.31 / relational 1.33.
     """
     # Repartition BEFORE shingle construction: the input is a handful of
     # scan splits locally, and the shingle HOF (interpreted lambdas) is
@@ -316,29 +280,17 @@ def _minhash_grouped(
     # responsibility stays with that caller.
     if shingle_rows is not None:
         ex = shingle_rows.select("doc", "s")
-    elif USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(df, text_col, id_col):
-        # Map-only Arrow kernel (guide §4.2): per-doc shingle set, salted
-        # md5 family and 4·n_salts chunk-MINs all inside one mapInArrow
-        # pass — the shingle HOF, the explode, the md5 projection AND the
-        # hash-aggregate exchange disappear.  Value-identical (see
-        # _minhash_grouped_arrow docstring + parity tests).
-        return _minhash_grouped_arrow(
-            PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
-            text_col,
-            id_col,
-            n_hashes,
-            k,
-        )
     else:
-        sh = with_shingles(
-            PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
-            text_col,
-            k,
-        )
-        ex = sh.select(
-            F.col(id_col).alias("doc"),
-            F.explode(F.array_distinct("shingles")).alias("s"),
-        )
+        nn = PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull()))
+        if _arrow_text_kernel_ok(df, text_col, id_col):
+            # Map-only Arrow kernel (guide §4.2): per-doc shingle set,
+            # salted md5 family and 4·n_salts chunk-MINs all inside one
+            # mapInArrow pass — the shingle HOF, the explode, the md5
+            # projection AND the hash-aggregate exchange disappear.
+            # Value-identical (see _minhash_grouped_arrow + parity tests).
+            g = _minhash_grouped_arrow(nn, text_col, id_col, n_hashes, k)
+            return g.repartition(F.col("doc")) if by_doc else g
+        ex = distinct_shingles(nn, text_col, id_col, k)
     with_md5 = ex.select(
         "doc",
         "s",
@@ -436,22 +388,9 @@ def minhash_near_dup_pairs(
     # both sides of the candidate-verification join — without it the
     # (md5-heavy) shingle/signature subtree is recomputed three times.
     # Long-lived callers release via uda_spark.cache.release_persisted().
-    g = _minhash_grouped(df, text_col, id_col, n_hashes, k, shingle_rows)
-    if (
-        shingle_rows is None
-        and REPARTITION_KERNEL_SIGNATURES
-        and USE_ARROW_TEXT_KERNELS
-        and _arrow_text_kernel_ok(df, text_col, id_col)
-    ):
-        # The Arrow kernel path is map-only, so the persisted relation
-        # carries the scan partitioning; both verify joins below would
-        # then each exchange the sset projection (the heavy shingle
-        # arrays) by doc.  One explicit doc repartition BEFORE the
-        # persist moves the arrays once and is reused by both joins
-        # (the relational path gets this layout for free from its final
-        # hash aggregate).  Interleaved 3-way A/B at sf0.1/32c, med of
-        # 6: kernel 1.46 / kernel+repart 1.31 / relational 1.33.
-        g = g.repartition(F.col("doc"))
+    g = _minhash_grouped(
+        df, text_col, id_col, n_hashes, k, shingle_rows, by_doc=True
+    )
     sh = cache.tracked_persist(g)
     banded = _banded(sh, n_hashes, bands)
     if max_bucket_size is not None:
@@ -519,22 +458,12 @@ def incremental_dedup(
         .distinct()
     )
 
-    def _grouped_for_join(side: DataFrame) -> DataFrame:
-        g = _minhash_grouped(side, text_col, id_col, n_hashes, k)
-        if (
-            REPARTITION_KERNEL_SIGNATURES
-            and USE_ARROW_TEXT_KERNELS
-            and _arrow_text_kernel_ok(side, text_col, id_col)
-        ):
-            # same layout reasoning as minhash_near_dup_pairs: the
-            # map-only kernel output repartitions by doc once so the
-            # verify joins (on the renamed doc) reuse the persisted
-            # partitioning instead of exchanging the sset arrays.
-            g = g.repartition(F.col("doc"))
-        return g
-
-    ng = cache.tracked_persist(_grouped_for_join(new_df))
-    bg = cache.tracked_persist(_grouped_for_join(base_df))
+    ng = cache.tracked_persist(
+        _minhash_grouped(new_df, text_col, id_col, n_hashes, k, by_doc=True)
+    )
+    bg = cache.tracked_persist(
+        _minhash_grouped(base_df, text_col, id_col, n_hashes, k, by_doc=True)
+    )
     nb = _banded(ng, n_hashes, bands)
     bb = _banded(bg, n_hashes, bands)
     if max_bucket_size is not None:
@@ -596,7 +525,7 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     Empty text DOES sign (it tokenizes to one empty token — the
     tokenizer keeps empty strings), matching the MinHash contract.
     """
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(df, text_col, id_col):
+    if _arrow_text_kernel_ok(df, text_col, id_col):
         return _simhash_signatures_arrow(
             PART.ensure_min_partitions(df.where(F.col(text_col).isNotNull())),
             text_col,
@@ -645,6 +574,7 @@ def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> Data
     Per-batch digest memoization is a pure cache — votes depend only on
     the token bytes.
     """
+    tokens = gram_fn(1)
 
     def gen(batches):
         from collections import Counter
@@ -678,7 +608,7 @@ def _simhash_signatures_arrow(df: DataFrame, text_col: str, id_col: str) -> Data
                     raise ValueError(
                         "simhash kernel received NULL text — filter upstream"
                     )
-                toks = txt.lower().split(" ")
+                toks = tokens(txt)
                 n = len(toks)
                 ones = np.zeros(bits, dtype=np.int64)
                 for tok, cnt in Counter(toks).items():
@@ -889,9 +819,10 @@ def _star_round(
 
 
 # Observability: rounds used by the most recent connected_components_star
-# call on this driver (the algorithm is deterministic per input, so a
-# run-to-run wall-time swing with a CONSTANT round count is environmental,
-# not algorithmic — recorded per VERDICT r06 #6).
+# call on this driver.  The ROUND count is deterministic per input; the
+# job count is not — under AQE the same input has run 44 or 46 jobs (one
+# extra query stage instead of a reused exchange), so a wall-time swing
+# with a constant round count is plan or environment, not algorithm.
 LAST_STAR_ROUNDS: int | None = None
 
 
@@ -1149,46 +1080,38 @@ def prefix_filter_similarity_pairs(
     from pyspark.sql import Window
 
     num, den = threshold_num, threshold_den
-    if shingle_rows is not None:
-        # caller-shared distinct (doc, s) relation — same tokenizer/k
-        # contract as _minhash_grouped's shingle_rows; persist stays the
-        # caller's responsibility
-        tk = shingle_rows.select(
-            F.col("doc").alias("doc_id"), F.col("s").alias("tok")
-        )
-    else:
-        # Measured r14: swapping this build for shingle_rows_arrow was a
-        # WASH-to-slight-loss (interleaved min-of-5 at sf0.1: relational
-        # 4.32s vs kernel 4.59s full-query; bare tk 0.50 vs 0.71) — at
-        # k=3 the explode+HOF is one cheap pass here and the kernel pays
-        # the JVM→Python→JVM row transfer without removing any exchange
-        # (unlike _minhash_grouped, where the kernel also absorbs the md5
-        # projection and the signature aggregate).  Kept relational.
-        sh = portable.shingles(portable.tokens(text_col, "spark"), shingle_k, "spark")
-        # spread the interpreted shingle HOF over all cores — the local
-        # corpus scan is 1-3 splits (same discipline as _minhash_grouped).
-        # (explode(array_distinct(...)) already emits unique (doc, tok)
-        # rows; the historical .distinct() here was a redundant exchange,
-        # kept out of both paths.)
+    # ``shingle_rows``: a caller-shared distinct (doc, s) relation — same
+    # tokenizer/k contract as _minhash_grouped's; persist stays the
+    # caller's responsibility.  Otherwise build it relationally.
+    # Measured r14: an Arrow shingle kernel here was a WASH-to-slight-loss
+    # (interleaved min-of-5 at sf0.1: relational 4.32s vs kernel 4.59s
+    # full-query; bare tk 0.50 vs 0.71) — at k=3 the explode+HOF is one
+    # cheap pass and the kernel pays the JVM→Python→JVM row transfer
+    # without removing any exchange (unlike _minhash_grouped, where the
+    # kernel also absorbs the md5 projection and the signature
+    # aggregate).  ensure_min_partitions spreads the interpreted shingle
+    # HOF over all cores — the local corpus scan is 1-3 splits.  NULL
+    # texts are not filtered here (they explode to no rows).
+    tk = shingle_rows
+    if tk is None:
         tk = cache.tracked_persist(
-            PART.ensure_min_partitions(corpus).select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(F.array_distinct(F.expr(sh))).alias("tok"),
+            distinct_shingles(
+                PART.ensure_min_partitions(corpus), text_col, id_col, shingle_k
             )
         )
-    dfreq = tk.groupBy("tok").agg(F.count("*").alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "tok")
+    dfreq = tk.groupBy("s").agg(F.count("*").alias("df"))
+    wdoc = Window.partitionBy("doc").orderBy("df", "s")
     ranked = (
-        tk.join(dfreq, on="tok")
+        tk.join(dfreq, on="s")
         .withColumn("rn", F.row_number().over(wdoc))
-        .withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
+        .withColumn("n", F.count("*").over(Window.partitionBy("doc")))
     )
     keep = F.col("rn") <= F.col("n") - F.expr(
         f"({num} * n + {den} - 1) div {den}"
     ) + 1
     if prefix_cap is not None:
         keep = keep & (F.col("df") <= prefix_cap)
-    pfx = ranked.where(keep).select("doc_id", "tok", "n", "rn")
+    pfx = ranked.where(keep).select("doc", "s", "n", "rn")
     # Candidate join with three sound prunes (zero false negatives each):
     #  * length filter — J <= min/max, so den*least < num*greatest pairs
     #    can never qualify;
@@ -1205,13 +1128,13 @@ def prefix_filter_similarity_pairs(
         .join(
             pfx.alias("b"),
             F.expr(
-                "a.tok = b.tok AND a.doc_id < b.doc_id"
+                "a.s = b.s AND a.doc < b.doc"
                 f" AND {den} * least(a.n, b.n) >= {num} * greatest(a.n, b.n)"
                 f" AND ({num} + {den}) * (1 + least(a.n - a.rn, b.n - b.rn))"
                 f" >= {num} * (a.n + b.n)"
             ),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
     # Verify by array intersection against the per-doc shingle SETS: the
@@ -1220,14 +1143,14 @@ def prefix_filter_similarity_pairs(
     # candidates and the full shingle relation never re-shuffles — ~25%
     # faster than re-joining the exploded tk relation twice and grouping
     # (measured at sf0.1), with the identical exact intersection count.
-    sets = tk.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("tok")).alias("sset"),
+    sets = tk.groupBy("doc").agg(
+        F.sort_array(F.collect_list("s")).alias("sset"),
         F.count("*").cast("long").alias("n"),
     )
     return (
         cand.join(
             sets.select(
-                F.col("doc_id").alias("doc_a"),
+                F.col("doc").alias("doc_a"),
                 F.col("sset").alias("set_a"),
                 F.col("n").alias("na"),
             ),
@@ -1235,7 +1158,7 @@ def prefix_filter_similarity_pairs(
         )
         .join(
             sets.select(
-                F.col("doc_id").alias("doc_b"),
+                F.col("doc").alias("doc_b"),
                 F.col("sset").alias("set_b"),
                 F.col("n").alias("nb"),
             ),

@@ -1304,26 +1304,20 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus shingle pass feeds both pair generators (the exact
     # ssjoin and the MinHash signatures consume the identical distinct
     # (doc, shingle) relation — recomputing it was the single biggest
-    # cost of this query): tokenize/shingle once (Arrow kernel, guide
-    # §4.2), persist, share.
+    # cost of this query): tokenize/shingle once, persist, share.
     from uda_spark.plans import partitioning as PART
 
     nn = PART.ensure_min_partitions(corpus.where(F.col("text").isNotNull()))
     # Relational build on purpose: the shared (doc, s) relation is
-    # map-side in BOTH formulations (no exchange to remove), so the
-    # Arrow shingle kernel only relocates the k=3 tokenize+shingle from
-    # the JVM HOF to Python and ships every shingle string across the
-    # boundary — interleaved A/B at sf0.1/32c, med of 6: kernel 7.43s
-    # vs relational 6.93s full-query.  Same lesson as the prefix-filter
-    # negative result (operators/dedup.py ~1124): a kernel pays only
-    # when it absorbs per-row compute (md5 families) or removes an
+    # map-side in BOTH formulations (no exchange to remove), so an Arrow
+    # shingle kernel only relocates the k=3 tokenize+shingle from the JVM
+    # HOF to Python and ships every shingle string across the boundary —
+    # interleaved A/B at sf0.1/32c, med of 6: kernel 7.43s vs relational
+    # 6.93s full-query.  Same lesson as the prefix-filter negative result
+    # (operators/dedup.py, prefix_filter_similarity_pairs): a kernel pays
+    # only when it absorbs per-row compute (md5 families) or removes an
     # exchange, and this build does neither.
-    shingle_rows = tracked_persist(
-        D.with_shingles(nn, "text", 3).select(
-            F.col("doc_id").alias("doc"),
-            F.explode(F.array_distinct("shingles")).alias("s"),
-        )
-    )
+    shingle_rows = tracked_persist(D.distinct_shingles(nn, "text", "doc_id", 3))
     truth = D.prefix_filter_similarity_pairs(
         corpus, "text", "doc_id",
         threshold_num=PFX_NUM, threshold_den=PFX_DEN,

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from uda_spark.cache import tracked_persist
 from uda_spark.functions import portable, text as TXT
+from uda_spark.plans import partitioning as PART
 from uda_spark.queries.common import t
 from uda_spark.registry import register
 
@@ -132,18 +133,6 @@ def text_bpe_token_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TFIDF_TOP_K = 3
 
-# The tf relation feeds BOTH the df aggregation and the final join.  Spark
-# does not reuse the exchange between them (the df branch prunes the count
-# column, so the subplans differ — verified in the executed adaptive plan:
-# 2 parquet scans, 0 ReusedExchange), so by default the corpus is exploded
-# and aggregated twice.  Measured at sf0.1 (min-of-3, warm JVM): recompute
-# 0.67–0.95s vs persisted 1.07–1.25s — materializing the (doc_id, term,
-# tf) cache costs more than the second pass at bench scale, so the default
-# stays False.  At 100 TB the ratio inverts (the double corpus
-# scan+explode dominates; the tf cache is token-count-sized and spills to
-# disk), so a cluster deployment should flip this to True.
-TFIDF_PERSIST_TF = False
-
 
 @register(
     "text_tfidf_top_terms",
@@ -180,9 +169,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: DF is derived from the TF relation (each (doc, term) row
     counts once toward the term's document frequency), so no separate
-    distinct-count pass exists; whether the shared tf prefix executes
-    once (persisted) or twice (recomputed) is the measured
-    ``TFIDF_PERSIST_TF`` tradeoff documented above.  The DF relation is
+    distinct-count pass exists; the shared tf prefix executes twice
+    (see the comment in the body).  The DF relation is
     vocabulary-sized and broadcast back onto TF; top-k per doc is a
     bounded window.  Every tfidf input is an exact integer, so ln() and
     the product are bit-identical across engines; ties break on the term
@@ -193,9 +181,14 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = docs.select(
         "doc_id", F.explode(F.expr(portable.tokens("text", "spark"))).alias("term")
     )
+    # tf feeds BOTH the df aggregate and the final join, and Spark does
+    # not reuse the exchange (the df branch prunes the count column: 2
+    # parquet scans, 0 ReusedExchange), so the corpus is exploded and
+    # aggregated twice — on purpose.  Measured at sf0.1 (min-of-3, warm
+    # JVM): recompute 0.67–0.95s vs persisted tf 1.07–1.25s.  At corpus
+    # scale the ratio inverts (the tf cache is token-count-sized and
+    # spills); persisting tf is then the lever.
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    if TFIDF_PERSIST_TF:
-        tf = tracked_persist(tf)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     # df is vocabulary-sized (unbounded at corpus scale) — no broadcast
     # hint; AQE still picks a broadcast join at runtime whenever the
@@ -394,7 +387,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAMS_SPARK = portable.shingles(portable.tokens("text", "spark"), 2, "spark")
 _BIGRAMS_DUCK = portable.shingles(portable.tokens("text", "duck"), 2, "duck")
 
 
@@ -426,78 +418,52 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     single most frequent bigram) and ``dup_bigram_frac`` (share of
     bigram occurrences that are repeats).
 
-    Scale shape: explode bigrams → (doc, bigram) count → per-doc
-    aggregate — two exchanges, both keyed by doc_id-prefixed keys, no
-    content in the second shuffle (counts only).  A crawl pipeline runs
-    this beside token/quality stats and filters on the fractions;
-    thresholds (e.g. top_bigram_frac > 0.18 per Gopher) stay user-side.
+    Scale shape: map-only.  A document's bigram multiset lives entirely
+    in its own row, so top_cnt/n_bigrams/n_distinct need NO exchange:
+    one Arrow kernel pass (guide §4.2) counts each doc's bigrams (the
+    explode → (doc, bigram) count → per-doc rollup formulation cost two
+    exchanges).  A crawl pipeline runs this beside token/quality stats
+    and filters on the fractions; thresholds (e.g. top_bigram_frac >
+    0.18 per Gopher) stay user-side.
     Every input to the fractions is an exact integer, so the single
     IEEE division + round(6) is bit-identical across engines.
     """
+    from uda_spark.operators.dedup import gram_fn
+
+    bigrams = gram_fn(2)
+
+    def gen(batches):
+        from collections import Counter
+
+        import pyarrow as pa
+
+        for b in batches:
+            ids = b.column(0).to_pylist()
+            texts = b.column(1).to_pylist()
+            top, nbg, ndis = [], [], []
+            for txt in texts:
+                grams = bigrams(txt)
+                c = Counter(grams)
+                top.append(max(c.values()))
+                nbg.append(len(grams))
+                ndis.append(len(c))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array(top, pa.int64()),
+                    pa.array(nbg, pa.int64()),
+                    pa.array(ndis, pa.int64()),
+                ],
+                names=["doc_id", "top_cnt", "n_bigrams", "n_distinct"],
+            )
+
+    # NULL texts drop, exactly as the oracle's unnest drops them
     docs = t(spark, sf_dir, "documents")
-    from uda_spark.operators.dedup import USE_ARROW_TEXT_KERNELS, _arrow_text_kernel_ok
-
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(docs, "text", "doc_id"):
-        # Map-only Arrow kernel (r14, guide §4.2): a document's bigram
-        # multiset lives entirely in its own row, so top_cnt/n_bigrams/
-        # n_distinct need NO exchange at all — the explode, the
-        # (doc, bg) count aggregate and the per-doc rollup (two
-        # exchanges) collapse into one Counter pass per doc.  The two
-        # fractions stay the same single IEEE divisions + round(6) the
-        # relational projection computed — bit-identical output.
-        from uda_spark.plans import partitioning as PART
-
-        def gen(batches):
-            from collections import Counter
-
-            import pyarrow as pa
-
-            for b in batches:
-                ids = b.column(0).to_pylist()
-                texts = b.column(1).to_pylist()
-                top, nbg, ndis = [], [], []
-                for txt in texts:
-                    toks = txt.lower().split(" ")
-                    n = len(toks)
-                    if n >= 2:
-                        grams = [
-                            toks[i] + " " + toks[i + 1] for i in range(n - 1)
-                        ]
-                    else:
-                        grams = [" ".join(toks)]
-                    c = Counter(grams)
-                    top.append(max(c.values()))
-                    nbg.append(len(grams))
-                    ndis.append(len(c))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ids, pa.int64()),
-                        pa.array(top, pa.int64()),
-                        pa.array(nbg, pa.int64()),
-                        pa.array(ndis, pa.int64()),
-                    ],
-                    names=["doc_id", "top_cnt", "n_bigrams", "n_distinct"],
-                )
-
-        # tokenizer is the parity-tested twin of portable.tokens (same
-        # contract as operators/dedup._doc_shingler); NULL texts drop,
-        # exactly as the explode path drops them
-        agg = PART.ensure_min_partitions(
-            docs.where(F.col("text").isNotNull())
-        ).select("doc_id", "text").mapInArrow(
-            gen, "doc_id long, top_cnt long, n_bigrams long, n_distinct long"
-        )
-    else:
-        cnt = (
-            docs.select("doc_id", F.explode(F.expr(_BIGRAMS_SPARK)).alias("bg"))
-            .groupBy("doc_id", "bg")
-            .agg(F.count("*").alias("c"))
-        )
-        agg = cnt.groupBy("doc_id").agg(
-            F.max("c").cast("long").alias("top_cnt"),
-            F.sum("c").cast("long").alias("n_bigrams"),
-            F.count("*").cast("long").alias("n_distinct"),
-        )
+    agg = PART.ensure_min_partitions(
+        docs.where(F.col("text").isNotNull())
+    ).select("doc_id", "text").mapInArrow(
+        gen, "doc_id long, top_cnt long, n_bigrams long, n_distinct long"
+    )
     return agg.select(
         "doc_id",
         "top_cnt",
@@ -514,7 +480,6 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECON_K = 5  # word n-gram size for the contamination check
 DECON_EVAL_MOD = 19  # doc_id % 19 == 0 stands in for the benchmark set
 
-_DECON_GRAMS_SPARK = portable.shingles(portable.tokens("text", "spark"), DECON_K, "spark")
 _DECON_GRAMS_DUCK = portable.shingles(portable.tokens("text", "duck"), DECON_K, "duck")
 
 
@@ -550,8 +515,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of the training corpus.
 
     Scale shape: the eval side is tiny relative to the corpus, so its
-    distinct n-gram hashes BROADCAST; the corpus side is one explode +
-    distinct + broadcast hash join + per-doc count — the corpus never
+    distinct n-gram hashes BROADCAST; the corpus side is one gram-hash
+    kernel pass + broadcast hash join + per-doc count — the corpus never
     shuffles its text, only 60-bit gram hashes keyed by doc.  At 100 TB
     with a real benchmark suite (a few MB of n-grams) the broadcast side
     is still tiny; collision risk of hash60 is ~2^-60 per pair, and a
@@ -559,45 +524,30 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
-    from uda_spark.operators.dedup import (
-        USE_ARROW_TEXT_KERNELS,
-        _arrow_text_kernel_ok,
-        gram_hash_rows_arrow,
-    )
+    from uda_spark.operators.dedup import gram_hash_rows_arrow
 
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(docs, "text", "doc_id"):
-        # Map-only Arrow kernel (r14, guide §4.2): each document's gram
-        # set lives in its own row, so the per-doc DISTINCT that the
-        # corpus side needed a full (doc_id, gh) exchange for happens
-        # inside the kernel — the explode, the hash60 projection and the
-        # distinct exchange all collapse into one mapInArrow pass per
-        # side (the eval filter pushes below the kernel, so the two
-        # passes together still scan each doc once).  Same 60-bit md5
-        # fold, same (doc, gh) relation — bit-identical join/count.
-        from uda_spark.plans import partitioning as PART
-
-        eval_grams = (
-            gram_hash_rows_arrow(
-                PART.ensure_min_partitions(docs.where(is_eval)),
-                "text",
-                "doc_id",
-                DECON_K,
-            )
-            .select("gh")
-            .distinct()
-        )
-        corpus = gram_hash_rows_arrow(
-            PART.ensure_min_partitions(docs.where(~is_eval)),
+    # Map-only Arrow kernel (r14, guide §4.2): each document's gram set
+    # lives in its own row, so the per-doc DISTINCT that the corpus side
+    # would need a full (doc_id, gh) exchange for happens inside the
+    # kernel — one mapInArrow pass per side (the eval filter pushes below
+    # the kernel, so the two passes together still scan each doc once).
+    # Same 60-bit md5 fold as the oracle's hash60.
+    eval_grams = (
+        gram_hash_rows_arrow(
+            PART.ensure_min_partitions(docs.where(is_eval)),
             "text",
             "doc_id",
             DECON_K,
-        ).withColumnRenamed("doc", "doc_id")
-    else:
-        grams = docs.select(
-            "doc_id", F.explode(F.expr(_DECON_GRAMS_SPARK)).alias("g")
-        ).select("doc_id", F.expr(portable.hash60("g", "spark")).alias("gh"))
-        eval_grams = grams.where(is_eval).select("gh").distinct()
-        corpus = grams.where(~is_eval).distinct()
+        )
+        .select("gh")
+        .distinct()
+    )
+    corpus = gram_hash_rows_arrow(
+        PART.ensure_min_partitions(docs.where(~is_eval)),
+        "text",
+        "doc_id",
+        DECON_K,
+    ).withColumnRenamed("doc", "doc_id")
     hits = (
         corpus.join(F.broadcast(eval_grams), on="gh")
         .groupBy("doc_id")
@@ -1789,9 +1739,7 @@ def pipeline_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUPGRAM_K = 5
 
-_DUPGRAM_SP = portable.shingles("toks", DUPGRAM_K, "spark")
 _DUPGRAM_DU = portable.shingles("toks", DUPGRAM_K, "duck")
-_DUPGRAM_H_SP = portable.hash60("g", "spark")
 _DUPGRAM_H_DU = portable.hash60("g", "duck")
 
 
@@ -1833,40 +1781,22 @@ def text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout still value-hash matches); all counts and the final ppm are
     exact integers.
 
-    Scale shape: one explode of the corpus into gram hashes (no gram
-    strings ever shuffle — 8-byte hashes keyed by doc), one partial-agg
-    exchange on (gh, doc), one on gh, then a single bounded row.  The
-    same two-exchange shape as the inverted index, ending in O(1)
-    output.
+    Scale shape: one map-only Arrow kernel pass (guide §4.2) turns each
+    document into its (gh, doc, count) rows — a doc's grams live in its
+    own row, so the (gh, doc) count needs no exchange and no gram string
+    ever shuffles; only the 8-byte-keyed rollup on gh does, then a single
+    bounded row.
     """
     docs = t(spark, sf_dir, "documents")
-    from uda_spark.operators.dedup import (
-        USE_ARROW_TEXT_KERNELS,
-        _arrow_text_kernel_ok,
-        gram_hash_rows_arrow,
-    )
+    from uda_spark.operators.dedup import gram_hash_rows_arrow
 
-    if USE_ARROW_TEXT_KERNELS and _arrow_text_kernel_ok(docs, "text", "doc_id"):
-        # Map-only Arrow kernel (r14, guide §4.2): the (gh, doc) count
-        # is per-document (each doc's grams live in its own row), so the
-        # explode, the hash60 projection and the first count exchange
-        # collapse into one Counter pass per doc; only the tiny
-        # (gh -> total_occ, n_docs) rollup still shuffles.
-        from uda_spark.plans import partitioning as PART
-
-        per = gram_hash_rows_arrow(
-            PART.ensure_min_partitions(docs),
-            "text",
-            "doc_id",
-            DUPGRAM_K,
-            counts=True,
-        ).withColumnRenamed("doc", "doc_id")
-    else:
-        toks = docs.withColumn("toks", F.expr(_SP_TOKS))
-        occ = toks.select(
-            "doc_id", F.explode(F.expr(_DUPGRAM_SP)).alias("g")
-        ).select("doc_id", F.expr(_DUPGRAM_H_SP).alias("gh"))
-        per = occ.groupBy("gh", "doc_id").agg(F.count("*").alias("c"))
+    per = gram_hash_rows_arrow(
+        PART.ensure_min_partitions(docs),
+        "text",
+        "doc_id",
+        DUPGRAM_K,
+        counts=True,
+    ).withColumnRenamed("doc", "doc_id")
     g = per.groupBy("gh").agg(
         F.sum("c").alias("total_occ"), F.count("*").alias("n_docs")
     )
